@@ -16,7 +16,27 @@ import graft.queries.Analytics
   * efficiency evidence.
   */
 object Bench {
+
+  /** Bench's env contract → pipeline config. Leaving
+    * SPARK_GRAFT_SCORE_PATH_PIPE unset or setting it to `fused` runs
+    * the default pipeline. The retired A/B values below throw, naming
+    * their variable, so an old A/B script cannot quietly measure the
+    * default instead. */
+  def pipelineCfg(env: Map[String, String]): graft.pipeline.Pipeline.Cfg = {
+    def retired(name: String, isRetired: String => Boolean, why: String): Unit =
+      env.get(name).filter(isRetired).foreach { v =>
+        throw new IllegalArgumentException(s"$name=$v is no longer supported: $why")
+      }
+    retired("SPARK_GRAFT_SCORE_PATH_PIPE", _ != "fused",
+      "stage S has one path (fused, with the dictMaxBytes-gated direct fallback)")
+    retired("SPARK_GRAFT_FUSED_MINHASH", _ == "0", "blocking always uses the fused MinHash kernel")
+    retired("SPARK_GRAFT_COMPACT_FILES", _ == "1", "the candidates checkpoint has one file layout")
+    graft.pipeline.Pipeline.Cfg()
+  }
+
   def main(args: Array[String]): Unit = {
+    // env contract first: a retired setting fails before any work starts
+    val pipeCfg = pipelineCfg(sys.env)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
@@ -189,13 +209,6 @@ object Bench {
     // --- JIT warmup: the first execution of the generated stage-S code
     // costs ~2x CPU (measured 2819 vs 1377 core-s on identical runs);
     // prime all kernels with an untimed pipeline at the t2 scale ---
-    // pipeline cfg overrides for A/B bisection (defaults = production)
-    val pipeCfg = graft.pipeline.Pipeline.Cfg(
-      blocking = graft.blocking.Blocking.Cfg(
-        fusedMinhash = sys.env.get("SPARK_GRAFT_FUSED_MINHASH").forall(_ != "0")),
-      scorePath = sys.env.getOrElse("SPARK_GRAFT_SCORE_PATH_PIPE", "fused"),
-      compactCandidateFiles = sys.env.get("SPARK_GRAFT_COMPACT_FILES").contains("1")
-    )
     locally {
       val (wuDocs, _) = graft.schema.Fixture.ensureWritten(spark, "t2")
       val wuDir = "/tmp/graft_bench_warmup"
@@ -223,13 +236,12 @@ object Bench {
     val nPairs = metrics.getOrElse(("scored_pairs", "scored_pairs"), 0.0)
     results("pir_blocking") = metrics.getOrElse(("candidates", "wall_ms"), 0.0) / 1000
     // scoring = rep checkpoints (S0) + dict stages (S1) + chunked pair
-    // scoring (S) — every stage the scorePath needs is charged to it
+    // scoring (S) — every stage of scoreStage is charged to it
     results("pir_scoring") = (metrics.getOrElse(("scored_pairs", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_rep", "wall_ms"), 0.0) +
       metrics.getOrElse(("media_rep", "wall_ms"), 0.0) +
       metrics.getOrElse(("text_dict", "wall_ms"), 0.0) +
-      metrics.getOrElse(("text_ids", "wall_ms"), 0.0) +
-      metrics.getOrElse(("text_pair_scores", "wall_ms"), 0.0)) / 1000
+      metrics.getOrElse(("text_ids", "wall_ms"), 0.0)) / 1000
     results("pir_clustering") = metrics.getOrElse(("clusters", "wall_ms"), 0.0) / 1000
     results("pir_pairs_per_sec") = if (results("pir_scoring") > 0) nPairs / results("pir_scoring") else 0.0
     results("pir_docs_per_sec") = if (e2e > 0) nDocs / e2e else 0.0

@@ -17,6 +17,16 @@ private[cluster] object UnionFind {
   private def lt(a: Any, b: Any): Boolean =
     a.asInstanceOf[Comparable[Any]].compareTo(b) < 0
 
+  /** The doubled capacity of a power-of-two [[LongLongMap]]. Fails
+    * loudly past 2^30 slots, where the shift would wrap Int and corrupt
+    * the map; reachable only by raising
+    * `ConnectedComponents.run`'s `maxLocalEdges` far past its default. */
+  private[cluster] def nextCapacity(cap: Int): Int = {
+    require(cap > 0 && cap < (1 << 30),
+      s"union-find map capacity $cap cannot double past 2^30 slots; lower maxLocalEdges")
+    cap << 1
+  }
+
   /** Open-addressing long→long map (linear probing, power-of-two
     * capacity, explicit occupancy array so the full key range is
     * usable — doc ids are xxhash64 values). Driver-side only. */
@@ -50,7 +60,7 @@ private[cluster] object UnionFind {
 
     private def grow(): Unit = {
       val oks = ks; val ovs = vs; val oocc = occ
-      cap <<= 1; mask = cap - 1
+      cap = nextCapacity(cap); mask = cap - 1
       ks = new Array[Long](cap); vs = new Array[Long](cap); occ = new Array[Boolean](cap)
       val on = n; n = 0
       var i = 0

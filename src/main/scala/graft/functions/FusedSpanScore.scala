@@ -23,10 +23,12 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructField, 
   * Generate, no aggregate, no span-pair shuffle — stage S becomes
   * join → map.
   *
-  * Value-identical to the exploded paths by construction: max and
-  * bit-OR are order-independent, and per span pair the arithmetic is
-  * exactly [[JwDict.jwGE]] / [[JwDict.levSim]] on the same dictionary
-  * strings (asserted column-exact in ScoringDedupSpec).
+  * Value-identical to the exploded fallback
+  * ([[graft.scoring.Scoring.scoreWithRepsDirect]]) by construction: max
+  * and bit-OR are order-independent, and per span pair the arithmetic
+  * is exactly that path's `JW.jwGE` and normalized Levenshtein on the
+  * same strings, read here from the dictionary view [[JwDict.arr]]
+  * (asserted column-exact in ScoringDedupSpec).
   *
   * Reference semantics: the multi-signal link probability of
   * src/core/cross_device_linker.py:143-216, re-expressed as

@@ -82,7 +82,8 @@ object JW {
     * each match-scan step is then `mask & ~claimed & window` +
     * numberOfTrailingZeros — the first free matching position, exactly
     * the reference scan's greedy choice. ~3-4× fewer ops than the
-    * byte-at-a-time loop on 40-char inputs (JwBench), value-identical
+    * byte-at-a-time loop on 40-char inputs (perfbench's
+    * `functions.jw_ns_per_call` times this kernel), value-identical
     * (JaroWinklerSpec differential test). Abort-check placement matches
     * the reference kernel exactly, so thresholded results agree too. */
   private[graft] def jwAsciiSmall(a: UTF8String, b: UTF8String, cutoff: Double = 0.0): Double = {

@@ -1,10 +1,6 @@
 package graft.functions
 
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Column, GraftShim}
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.types.{DataType, DoubleType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The broadcast span-text dictionary, packed FLAT: one UTF-8 byte
@@ -26,22 +22,20 @@ final class PackedDict(val flat: Array[Byte], val offs: Array[Int]) extends Seri
   def size: Int = offs.length - 1
 }
 
-/** Dictionary-indexed similarity kernels: Jaro-Winkler / Levenshtein
-  * over dense text ids, with the distinct normalized span texts shipped
-  * ONCE per executor as a broadcast [[PackedDict]].
+/** The executor-side view of the broadcast span-text dictionary that
+  * [[FusedSpanKernel]] reads by dense text id.
   *
-  * Why: stage S explodes candidate pairs into span-pair rows, and with
-  * inline string kernels every exploded row materializes both span
-  * texts (and each Generate re-copies the inner text array per outer
-  * row) — measured as the stage's memory-bandwidth ceiling at 32
-  * threads. With dict ids the whole exploded stream is fixed-width
-  * ints; the kernel reads text bytes from the broadcast dictionary,
-  * where consecutive rows of the same candidate pair hit the same ~10
-  * entries — cache-resident, ~15× less DRAM traffic.
+  * Why a dictionary: with inline string kernels every exploded span
+  * pair materializes both span texts — measured as stage S's
+  * memory-bandwidth ceiling at 32 threads. With dict ids the pair
+  * stream carries fixed-width ints, and the kernel reads text bytes
+  * from the broadcast, where one candidate pair's ~10 entries stay
+  * cache-resident.
   *
   * Scale bound: the dictionary must fit in executor memory (bench
-  * fixture: 1.65M distinct texts ≈ 150 MB heap). Corpora beyond that
-  * use [[graft.scoring.Scoring.scoreWithRepsDirect]] — same results,
+  * fixture: 1.65M distinct texts ≈ 150 MB heap). The pipeline gates it
+  * on `Pipeline.Cfg.dictMaxBytes` and above that uses
+  * [[graft.scoring.Scoring.scoreWithRepsDirect]] — same results,
   * streaming text bytes instead.
   */
 object JwDict {
@@ -94,65 +88,4 @@ object JwDict {
       }
     }
   }
-
-  /** Thresholded Jaro-Winkler on dict ids; equal ids are equal texts
-    * (dense ids are collision-free by construction) → exact 1.0 without
-    * a lookup, matching JW.jwGE on identical strings. */
-  def jwGE(bc: Broadcast[PackedDict], a: Int, b: Int, cutoff: Double): Double = {
-    if (a == b) return 1.0
-    val d = arr(bc)
-    JW.jwGE(d(a), d(b), cutoff)
-  }
-
-  /** Normalized Levenshtein similarity on dict ids — identical to
-    * `1 - levenshtein(ta, tb) / greatest(length(ta), length(tb), 1)`
-    * (the built-in levenshtein is UTF8String.levenshteinDistance). */
-  def levSim(bc: Broadcast[PackedDict], a: Int, b: Int): Double = {
-    if (a == b) return 1.0
-    val d = arr(bc)
-    val x = d(a)
-    val y = d(b)
-    val mx = math.max(math.max(x.numChars, y.numChars), 1)
-    1.0 - x.levenshteinDistance(y).toDouble / mx
-  }
-}
-
-private[functions] abstract class DictKernelExpr extends BinaryExpression {
-  def bc: Broadcast[PackedDict]
-  override def dataType: DataType = DoubleType
-  override def nullIntolerant: Boolean = true
-  protected def genCall(ctx: CodegenContext, l: String, r: String): String
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("jwDictBc", bc, "org.apache.spark.broadcast.Broadcast")
-    defineCodeGen(ctx, ev, (l, r) => genCall(ctx, l, r).replace("$BC", ref))
-  }
-}
-
-case class JwDictGate(left: Expression, right: Expression, cutoff: Double, bc: Broadcast[PackedDict])
-    extends DictKernelExpr {
-  override def prettyName: String = "jaro_winkler_dict_ge"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JwDict.jwGE(bc, l.asInstanceOf[Int], r.asInstanceOf[Int], cutoff)
-  override protected def genCall(ctx: CodegenContext, l: String, r: String): String =
-    s"graft.functions.JwDict.jwGE($$BC, $l, $r, ${cutoff}D)"
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-case class LevDictSim(left: Expression, right: Expression, bc: Broadcast[PackedDict])
-    extends DictKernelExpr {
-  override def prettyName: String = "lev_sim_dict"
-  override def nullSafeEval(l: Any, r: Any): Any =
-    JwDict.levSim(bc, l.asInstanceOf[Int], r.asInstanceOf[Int])
-  override protected def genCall(ctx: CodegenContext, l: String, r: String): String =
-    s"graft.functions.JwDict.levSim($$BC, $l, $r)"
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-object JwDictExpr {
-  def jwGE(a: Column, b: Column, cutoff: Double, bc: Broadcast[PackedDict]): Column =
-    GraftShim.column(JwDictGate(GraftShim.expression(a), GraftShim.expression(b), cutoff, bc))
-  def levSim(a: Column, b: Column, bc: Broadcast[PackedDict]): Column =
-    GraftShim.column(LevDictSim(GraftShim.expression(a), GraftShim.expression(b), bc))
 }

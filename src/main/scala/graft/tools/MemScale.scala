@@ -12,7 +12,7 @@ import graft.util.{MemBw, MemGather}
   *
   * The number that matters is each pattern's OWN 8→32 efficiency. If
   * gather lands at stage S's measured ratio while the pure-ALU probe
-  * (JwScale, committed: 0.92) doesn't, the stage-S ceiling is the
+  * (Jaro-Winkler, measured 0.92) doesn't, the stage-S ceiling is the
   * box's memory-parallelism limit measured directly.
   *
   * Run: `sbt "runMain graft.tools.MemScale [out.json]"` (or plain java

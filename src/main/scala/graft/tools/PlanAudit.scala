@@ -55,10 +55,6 @@ object PlanAudit {
       "One compiled pass per doc (MinHashBands expression): rolling shingle window + k affine minima + " +
         "band mixing in registers — NO shuffle, no k-min aggregate; scan reads only (doc_id, spans).",
       keys)
-    audit("stage B — docKeys (explode → k-min aggregate baseline)",
-      "The pre-fusion formulation: shingle Generate + one shuffle for the per-doc signature aggregate. " +
-        "Bit-identical keys (BlockingFusedSpec); kept as the A/B baseline.",
-      graft.blocking.Blocking.docKeys(docs, graft.blocking.Blocking.Cfg(fusedMinhash = false)))
     val keysM = keys.localCheckpoint(true)
     audit("stage B — candidatesFromKeys (census + salted pair self-join)",
       "Census join + self-join + canonical dedup aggregate + range repartition over the materialized key table.",
@@ -74,19 +70,6 @@ object PlanAudit {
           "codegen'd expression over the two dict-id arrays (FusedSpanScore). Media branch unchanged. " +
           "Each array payload rides exactly one sort-merge join; branches merge fixed-width at pair grain.",
         graft.scoring.Scoring.scoreWithRepsFused(
-          cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
-      audit("stage S — scoreWithRepsFused + broadcast reps (multi-node knob, off by default)",
-        "Same kernel with every rep frame broadcast: zero shuffle of the pair stream — worth two network " +
-          "shuffles on a real cluster, a measured CPU loss on one box (FusedAB; Cfg.broadcastRepsMaxDocs).",
-        graft.scoring.Scoring.scoreWithRepsFused(
-          cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict),
-          bcastReps = true))
-      audit("stage S — scoreWithRepsDict (int-only exploded span pairs → single hash aggregate)",
-        "Dict-kernel exploded path (A/B baseline for the fused kernel): the stream carries only " +
-          "(ids, span index, text id) ints — " +
-          "no text bytes in any join shuffle or Generate copy; the JW/Levenshtein kernels read the broadcast " +
-          "dictionary; zero-signal rows are filtered BEFORE the aggregate; bit-masks avoid an Expand.",
-        graft.scoring.Scoring.scoreWithRepsDict(
           cand, ids, med, graft.scoring.Scoring.Weights(), graft.scoring.Scoring.broadcastDict(dict)))
       audit("stage S — scoreWithRepsDirect (text-carrying fallback)",
         "Inline string kernels over the exploded stream — the unbounded-dictionary fallback; same value " +

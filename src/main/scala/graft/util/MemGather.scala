@@ -10,7 +10,7 @@ package graft.util
   * controller's outstanding-miss concurrency, a resource that stops
   * scaling with thread count long before sequential bandwidth does.
   * If THIS probe's 8→32 efficiency lands where stage S's does
-  * (0.4-0.6) while the pure-ALU JwScale probe scales at 0.92, the
+  * (0.4-0.6) while a pure-ALU Jaro-Winkler probe scales at 0.92, the
   * stage-S ratio is the box's memory-parallelism ceiling measured
   * directly, not a code property.
   *

@@ -7,7 +7,8 @@ import graft.schema.{Doc, Fixture, Span}
 
 /** The fused MinHash kernel (functions/MinHashBands.scala) must emit
   * BIT-IDENTICAL (doc_id, key_kind, block_key) rows to the
-  * explode→k-min-aggregate formulation — blocking keys feed the
+  * explode→k-min-aggregate formulation (kept here as the oracle) —
+  * blocking keys feed the
   * byte-stable candidate checkpoint, so "same recall" is not enough.
   * Exercised on the t1 fixture plus edge docs: empty text, text
   * shorter than the shingle width, exact shingle-width text, non-ASCII
@@ -16,8 +17,25 @@ class BlockingFusedSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
 
+  /** The formulation the kernel replaced: shingle hashes exploded, k
+    * affine minima aggregated per doc, xxhash64 band keys over the
+    * signature. Media keys are docKeys' own (the kernel does not touch
+    * them). */
+  private def aggregateKeys(docs: org.apache.spark.sql.DataFrame, cfg: Blocking.Cfg): org.apache.spark.sql.DataFrame = {
+    import graft.text.TextOps._
+    val dt = normText(array_join(
+      transform(filter(col("spans"), s => s.getField("kind") === lit("text")), s => s.getField("text")), " "))
+    val aggs = minhashAggExprs(col("h"), cfg.minhashK, cfg.seed)
+    docs.select(col("doc_id"), explode(shingleHashes(charShingles(dt, cfg.shingleN))).as("h"))
+      .groupBy("doc_id")
+      .agg(aggs.head, aggs.tail: _*)
+      .select(col("doc_id"), explode(bandKeys(minhashSigFromAgg(cfg.minhashK), cfg.bands, cfg.rows)).as("block_key"))
+      .select(col("doc_id"), lit("lsh").as("key_kind"), col("block_key"))
+      .unionByName(Blocking.docKeys(docs, cfg).where(col("key_kind") === "media"))
+  }
+
   private def keySet(docs: org.apache.spark.sql.DataFrame, fused: Boolean): Set[(String, String, Long)] =
-    Blocking.docKeys(docs, Blocking.Cfg(fusedMinhash = fused))
+    (if (fused) Blocking.docKeys(docs, Blocking.Cfg()) else aggregateKeys(docs, Blocking.Cfg()))
       .collect()
       .map(r => (r.getAs[String]("doc_id"), r.getAs[String]("key_kind"), r.getAs[Long]("block_key")))
       .toSet

@@ -85,20 +85,9 @@ class PipelineSpec extends AnyFunSuite {
     // fall back from fused to direct (no broadcast collect, no text_ids
     // stage), record the decision, and produce value-identical output
     val dirG = Files.createTempDirectory("graft_pipe_dictgate").toString
-    // piggyback compactCandidateFiles on the same run (one pipeline
-    // execution covers both knobs' value-identity)
-    val gated = Pipeline.run(spark, docs, dirG,
-      Pipeline.Cfg(dictMaxBytes = 1L, compactCandidateFiles = true))
+    val gated = Pipeline.run(spark, docs, dirG, Pipeline.Cfg(dictMaxBytes = 1L))
     assert(!new java.io.File(s"$dirG/text_ids/_SUCCESS").exists(),
       "fallback run must not build the dictionary-id rep")
-    // compact layout: exactly one data file per chunk dir
-    val chunkDirs = new java.io.File(s"$dirG/candidates").listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("chunk_"))
-    assert(chunkDirs.nonEmpty)
-    chunkDirs.foreach { d =>
-      val parts = d.listFiles().count(_.getName.endsWith(".parquet"))
-      assert(parts == 1, s"${d.getName}: expected 1 compacted file, found $parts")
-    }
     val m = spark.read.parquet(s"$dirG/metrics")
     assert(m.where(col("name") === "dict_fallback" && col("value") === 1.0).count() == 1,
       "fallback must be recorded in the metrics table")
@@ -182,6 +171,22 @@ class PipelineSpec extends AnyFunSuite {
     new java.io.File(scoredDir, "_SUCCESS").delete()
     org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$runDir/clusters"))
     Pipeline.run(spark, docs, runDir)
+  }
+
+  test("no ckpt-meta thread outlives two back-to-back runs") {
+    // a long-lived JVM (streaming micro-batches, bench loops) calls run
+    // over and over: each run's background lineage/metrics pool must be
+    // gone when it returns
+    val small = Fixture.docs(spark, Fixture.Cfg(entities = 8, docsPerEntityMin = 3, docsPerEntityMax = 5)).toDF()
+    Seq("graft_pipe_threads_a", "graft_pipe_threads_b").foreach { d =>
+      Pipeline.run(spark, small, Files.createTempDirectory(d).toString)
+    }
+    def metaThreads() = Thread.getAllStackTraces.keySet.toArray(Array.empty[Thread])
+      .filter(t => t.getName == "ckpt-meta" && t.isAlive)
+    // a terminated pool's worker may take a moment to leave run()
+    val deadline = System.nanoTime() + 5000000000L
+    while (metaThreads().nonEmpty && System.nanoTime() < deadline) Thread.sleep(20)
+    assert(metaThreads().isEmpty, s"${metaThreads().length} ckpt-meta threads still alive")
   }
 
   test("lineage covers every stage; metrics recorded") {

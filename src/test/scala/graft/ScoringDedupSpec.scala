@@ -6,9 +6,9 @@ import graft.schema.{Doc, Fixture, Span}
 import graft.blocking.Blocking
 import graft.scoring.Scoring
 
-/** The round-4 factorized stage S (distinct-text-pair kernel table +
-  * long-only exploded stream) must be VALUE-IDENTICAL to the inline
-  * single-pass path on every column — scores feed the F1 gate and the
+/** The fused stage-S path (one kernel call per pair over dictionary
+  * ids) must be VALUE-IDENTICAL to the inline exploded path it falls
+  * back to on every column — scores feed the F1 gate and the
   * byte-stable resume invariant, so "close" is not enough. Exercised on
   * the t1 fixture (realistic phrase repetition) plus hand-built edge
   * docs: empty texts arrays, empty-string spans, media-only docs,
@@ -25,30 +25,25 @@ class ScoringDedupSpec extends AnyFunSuite {
     val dict = Scoring.textDictDense(txt).localCheckpoint(true)
     val ids = Scoring.textIdsRep(txt, dict)
     val a = Scoring.scoreWithRepsDirect(cand, txt, med).collect().map(r => key(r) -> r).toMap
-    val b = Scoring.scoreWithReps(cand, txt, med).collect().map(r => key(r) -> r).toMap
     val bc = Scoring.broadcastDict(dict)
-    val c = Scoring.scoreWithRepsDict(cand, ids, med, Scoring.Weights(), bc)
-      .collect().map(r => key(r) -> r).toMap
     val d = Scoring.scoreWithRepsFused(cand, ids, med, Scoring.Weights(), bc)
       .collect().map(r => key(r) -> r).toMap
-    for ((other, lbl) <- Seq((b, "pair"), (c, "dict"), (d, "fused"))) {
-      assert(a.keySet == other.keySet,
-        s"pair sets differ ($lbl): only-direct=${(a.keySet -- other.keySet).take(5)} only-$lbl=${(other.keySet -- a.keySet).take(5)}")
-      a.foreach { case (k, ra) =>
-        val rb = other(k)
-        assert(ra == rb, s"pair $k differs:\n direct=$ra\n $lbl =$rb")
-      }
+    assert(a.keySet == d.keySet,
+      s"pair sets differ: only-direct=${(a.keySet -- d.keySet).take(5)} only-fused=${(d.keySet -- a.keySet).take(5)}")
+    a.foreach { case (k, ra) =>
+      val rd = d(k)
+      assert(ra == rd, s"pair $k differs:\n direct=$ra\n fused =$rd")
     }
   }
 
-  test("factorized path equals direct path exactly on the t1 fixture") {
+  test("fused path equals direct path exactly on the t1 fixture") {
     val docs = Fixture.docs(spark, Fixture.scales("t1")).toDF()
     val cand = Blocking.candidates(docs, Blocking.Cfg()).localCheckpoint(true)
     assert(cand.count() > 1000, "fixture should produce a meaningful candidate set")
     assertIdentical(cand, docs)
   }
 
-  test("factorized path equals direct path on edge-case docs") {
+  test("fused path equals direct path on edge-case docs") {
     import spark.implicits._
     def text(t: String, off: Int) = Span("text", t, null, off)
     def media(m: String, off: Int) = Span("media", null, m, off)
