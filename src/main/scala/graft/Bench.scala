@@ -86,6 +86,7 @@ object Bench {
     // memory-controller ceiling is fed with
     val phaseShufW = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
     val phaseShufR = new java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong]()
+    val phaseMaps = Seq(phaseCpu, phaseGc, phaseShufW, phaseShufR)
     def bump(m: java.util.concurrent.ConcurrentHashMap[String, java.util.concurrent.atomic.AtomicLong], k: String, v: Long): Unit =
       m.computeIfAbsent(k, _ => new java.util.concurrent.atomic.AtomicLong).addAndGet(v)
     spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
@@ -216,7 +217,7 @@ object Bench {
       graft.pipeline.Pipeline.run(spark, spark.read.parquet(wuDocs), wuDir, pipeCfg)
     }
     cpuNs.set(0); gcMs.set(0); runMs.set(0)
-    phaseCpu.clear(); phaseGc.clear()
+    phaseMaps.foreach(_.clear())
 
     // --- resolution pipeline (fresh run dir => full compute + checkpoints) ---
     val scale = graft.queries.Resolution.scaleFor(sfDir)

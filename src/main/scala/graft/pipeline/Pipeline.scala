@@ -44,24 +44,6 @@ object Pipeline {
       // a loss when the host's sync/writeback path is degraded; lower
       // scoreChunks on storage with expensive commits.
       scoreChunks: Int = 8,
-      // dictionary-encode doc ids to longs (nid = xxhash64(doc_id))
-      // through B/S/C: variable-width string ids otherwise ride every
-      // exploded span-pair row, every scored pair, and every CC
-      // iteration — pure shuffle/aggregate payload. Long keys hash and
-      // compare in one instruction and shrink the dominant streams.
-      // Ids map back to strings at the clusters output (and lazily on
-      // the Result accessors); a distinct-count guard fails loudly on
-      // the ~n²/2⁶⁴ hash-collision case (at 10¹² docs switch to
-      // dictMode = "dense" instead).
-      dictIds: Boolean = true,
-      // "hash": nid = xxhash64(doc_id) — zero-shuffle encode, collision
-      // guard fails loudly at ~n²/2⁶⁴ odds. "dense": a stage-B0
-      // checkpointed dictionary of stable dense ids (range-sort +
-      // zipWithIndex) — one extra shuffle of the id column at encode
-      // time, but collision-FREE by construction: the 10¹²-doc mode,
-      // where birthday odds on 64-bit hashes (~2.7%) stop being
-      // ignorable.
-      dictMode: String = "hash",
       // byte budget for the span-text dictionary broadcast that the
       // fused scoring path (Scoring.scoreWithRepsFused) depends on. The
       // dictionary is the ONE broadcast in the pipeline that grows with
@@ -83,9 +65,9 @@ object Pipeline {
       // (`cc_assign` — delta contracts old edge endpoints to their HARD
       // component label; the post-attach clusters table would glue
       // sub-threshold attach evidence into the merge graph). Both are
-      // stored in the run's internal id space; runDelta checks the
-      // _dictids marker for compatibility. Off by default: a run that
-      // will never seed a delta shouldn't pay the keys write.
+      // stored in the run's internal id space (see IdSpace). Off by
+      // default: a run that will never seed a delta shouldn't pay the
+      // keys write.
       persistForDelta: Boolean = false
   )
 
@@ -191,6 +173,69 @@ object Pipeline {
       }
   }
 
+  /** Run-dir marker pin: the first run writes `value` to `path`; a
+    * later run into the same dir must find the same value, else
+    * `mismatch(prior)` is thrown — checkpoints written under another
+    * setting would be silently mixed with this run's. */
+  private def pin(path: String, value: String)(mismatch: String => String): Unit = {
+    val p = java.nio.file.Paths.get(path)
+    if (java.nio.file.Files.exists(p)) {
+      val prior = java.nio.file.Files.readString(p).trim
+      require(prior == value.trim, mismatch(prior))
+    } else java.nio.file.Files.writeString(p, value)
+  }
+
+  /** The one doc-id encoding, recorded in every run dir's `_dictids`. */
+  private val IdEncoding = "hash"
+
+  /** Collision guard over a distinct `(orig_id, nid)` map: one
+    * groupBy(nid); throws naming the ids that share a nid. xxhash64
+    * over n ids collides with odds ~n²/2⁶⁵ (~3×10⁻⁷ at 3.25 M docs) —
+    * a colliding corpus fails here instead of merging two docs. */
+  private[graft] def requireUniqueNids(idMap: DataFrame): Unit = {
+    val clashes = idMap.groupBy("nid").count().where(col("count") > 1)
+      .select("nid").limit(5).collect().map(_.getLong(0))
+    if (clashes.nonEmpty) {
+      val named = idMap.where(col("nid").isin(clashes.toSeq: _*))
+        .groupBy("nid").agg(sort_array(collect_list(col("orig_id"))).as("ids"))
+        .collect()
+        .map(r => s"${r.getLong(0)} <- ${r.getSeq[String](1).mkString(", ")}")
+      throw new IllegalArgumentException(
+        s"xxhash64 doc_id collision: ${named.mkString("; ")} — rename one of each set of colliding ids")
+    }
+  }
+
+  /** The id boundary shared by [[run]] and [[runDelta]]. Doc ids travel
+    * B/S/C as nid = xxhash64(doc_id): a long hashes and compares in one
+    * instruction, where a variable-width string id would ride every
+    * span-pair row, scored pair and CC iteration. Ids map back to the
+    * original strings at the clusters output and the Result accessors.
+    *
+    * Construction runs before the caller writes any stage directory:
+    * it pins `_dictids` (a dir written under another encoding would
+    * resume into joins that match nothing), builds and pins the
+    * distinct `(orig_id, nid)` map over `origIds` (every id the output
+    * can carry), and guards it with [[requireUniqueNids]]. The map is
+    * pinned because [[mapBack]] joins it once per id column. */
+  private final class IdSpace(runDir: String, origIds: DataFrame) {
+    pin(s"$runDir/_dictids", IdEncoding)(prior =>
+      s"run dir $runDir was written with id encoding '$prior' but this run uses '$IdEncoding'; " +
+        "use a fresh run dir")
+    private val idMap = origIds.toDF("orig_id").distinct()
+      .select(col("orig_id"), xxhash64(col("orig_id")).as("nid"))
+      .localCheckpoint(true)
+    requireUniqueNids(idMap)
+
+    def encode(docs: DataFrame): DataFrame = docs.withColumn("doc_id", xxhash64(col("doc_id")))
+
+    def mapBack(df: DataFrame, idCols: Seq[String]): DataFrame =
+      idCols.foldLeft(df) { (d, c) =>
+        d.join(idMap.select(col("nid").as(c), col("orig_id").as(s"${c}__s")), c)
+          .drop(c)
+          .withColumnRenamed(s"${c}__s", c)
+      }
+  }
+
   /** Stages S0 (doc reps) + S1 (span-text dictionary, size-gated) +
     * S (chunk-resumable pair scoring) — shared verbatim by [[run]] and
     * [[runDelta]]; see the inline comments at each block. Returns the
@@ -290,14 +335,7 @@ object Pipeline {
       // scheduler backfills each job's shuffle/commit barriers with the
       // other chunks' tasks (sequential chunks left cores idle at every
       // barrier: measured 0.56 scaling efficiency 8→32 before this)
-      // fail at config read with the env var named, not mid-run with a
-      // bare NumberFormatException after blocking already committed
-      val conc = sys.env.get("SPARK_GRAFT_SCORE_CONC").map { s =>
-        scala.util.Try(s.trim.toInt).getOrElse(
-          throw new IllegalArgumentException(
-            s"SPARK_GRAFT_SCORE_CONC must be an integer, got '$s'"))
-      }.getOrElse(math.min(cfg.scoreChunks, 8))
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.max(1, conc))
+      val pool = java.util.concurrent.Executors.newFixedThreadPool(math.min(cfg.scoreChunks, 8))
       implicit val ec: scala.concurrent.ExecutionContext =
         scala.concurrent.ExecutionContext.fromExecutor(pool)
       val futs = (0 until cfg.scoreChunks).map { i =>
@@ -346,25 +384,10 @@ object Pipeline {
     val runId = "run"
     new java.io.File(runDir).mkdirs()
 
-    // id-encoding marker: checkpoints written under a different id
-    // encoding are incompatible (long nids vs string ids, or hash vs
-    // dense longs) — resuming across the mismatch would silently join
-    // nothing. Fail loudly like _chunks. ("true" = legacy hash marker.)
-    val idMode = if (!cfg.dictIds) "off" else cfg.dictMode
-    require(Set("off", "hash", "dense").contains(idMode), s"unknown dictMode '${cfg.dictMode}'")
-    locally {
-      val marker = java.nio.file.Paths.get(s"$runDir/_dictids")
-      if (java.nio.file.Files.exists(marker)) {
-        val prior = java.nio.file.Files.readString(marker).trim match {
-          case "true" => "hash"
-          case "false" => "off"
-          case m => m
-        }
-        require(prior == idMode,
-          s"run dir $runDir was written with id mode '$prior' but this run uses '$idMode'; " +
-            "use a fresh run dir or match the setting")
-      } else java.nio.file.Files.writeString(marker, idMode)
-    }
+    // the id map and its collision guard open stage B
+    graft.util.PhaseTracker.set("blocking")
+    val ids = new IdSpace(runDir, docs0.select("doc_id"))
+    val docs = ids.encode(docs0)
 
     val ck = new Ckpt(spark, runDir, runId)
     def stage(
@@ -375,47 +398,6 @@ object Pipeline {
         compute: => DataFrame
     ): DataFrame = ck.stage(name, metrics, partitionCols)(compute)
 
-    // internal long ids (see Cfg.dictIds/dictMode); the checkpointed
-    // clusters table and the Result accessors expose original string
-    // ids. idMap is distinct-ed: duplicate doc_id input rows would
-    // otherwise multiply every mapBack inner join.
-    // Stage B0 (dense mode only) — stable dense ids: distinct ids
-    // range-sorted then zipWithIndex (two narrow jobs, one shuffle of
-    // the id column; no global single-partition sort). Checkpointed
-    // first so every later stage and resume reads the SAME dictionary.
-    lazy val denseDict = stage("id_dict") {
-      import spark.implicits._
-      docs0.select("doc_id").distinct()
-        .repartitionByRange(col("doc_id"))
-        .sortWithinPartitions("doc_id")
-        .rdd.zipWithIndex
-        .map { case (r, i) => (r.getString(0), i) }
-        .toDF("orig_id", "nid")
-    }
-    // pinned: mapBack joins it once per id column (two in the clusters
-    // stage alone) — without the pin each join re-scans the input and
-    // re-runs the distinct shuffle
-    lazy val idMap = (idMode match {
-      case "dense" => denseDict
-      case _ => docs0.select(col("doc_id").as("orig_id"), xxhash64(col("doc_id")).as("nid")).distinct()
-    }).localCheckpoint(true)
-    val docs = idMode match {
-      case "off" => docs0
-      case "hash" => docs0.withColumn("doc_id", xxhash64(col("doc_id")))
-      case "dense" =>
-        docs0
-          .join(denseDict.withColumnRenamed("orig_id", "doc_id"), "doc_id")
-          .drop("doc_id")
-          .withColumnRenamed("nid", "doc_id")
-    }
-    def mapBack(df: DataFrame, idCols: Seq[String]): DataFrame =
-      if (idMode == "off") df
-      else idCols.foldLeft(df) { (d, c) =>
-        d.join(idMap.select(col("nid").as(c), col("orig_id").as(s"${c}__s")), c)
-          .drop(c)
-          .withColumnRenamed(s"${c}__s", c)
-      }
-
     // scoring-chunk partition column; the modulus rides in the name so
     // the checkpoint layout self-describes (see the candidates stage)
     val chunkCol = s"chunk_${cfg.scoreChunks}"
@@ -423,7 +405,6 @@ object Pipeline {
     // Stage B — key table materialized once (lazily, only when the
     // candidates checkpoint is absent), shared by the pair join and the
     // drop-accounting metrics.
-    graft.util.PhaseTracker.set("blocking")
     // persistForDelta: the key table becomes a real checkpoint (the
     // stage-B1 table a cluster deployment would write anyway) so a
     // later runDelta can join against it; otherwise a localCheckpoint
@@ -438,18 +419,6 @@ object Pipeline {
     val candidates = stage(
       "candidates",
       (_, total) => {
-        if (idMode == "hash") {
-          // loud collision guard: one pruned single-column pass per
-          // fresh run; at 10¹² ids use dictMode = "dense" (collisions
-          // become certain at that scale). Dense ids need no guard —
-          // unique by construction.
-          val ids = docs0.agg(
-            countDistinct(col("doc_id")).as("n"),
-            countDistinct(xxhash64(col("doc_id"))).as("nh")
-          ).head()
-          require(ids.getLong(0) == ids.getLong(1),
-            s"xxhash64 doc_id collision (${ids.getLong(0)} ids -> ${ids.getLong(1)} hashes); rerun with dictIds=false")
-        }
         val drops = Blocking.dropMetrics(keys, cfg.blocking, Some(census)).head()
         Seq(
           "candidate_pairs" -> total.toDouble,
@@ -510,10 +479,10 @@ object Pipeline {
       // contraction step (internal id space; see Cfg.persistForDelta)
       if (cfg.persistForDelta) ck.stage("cc_assign")(assign)
       // C2: aggregate-evidence singleton attachment (see Attach), then
-      // dictionary decode — the stored clusters table is user-facing
-      // and carries original ids (cluster_id = the doc_id of the
-      // min-nid member; deterministic, so resume stays byte-stable)
-      mapBack(
+      // id decode (IdSpace.mapBack) — the stored clusters table is
+      // user-facing and carries original ids (cluster_id = the doc_id of
+      // the min-nid member; deterministic, so resume stays byte-stable)
+      ids.mapBack(
         Attach.attachSingletons(assign, scored),
         Seq("doc_id", "cluster_id")
       ).repartitionByRange(col("cluster_id"), col("doc_id"))
@@ -546,8 +515,8 @@ object Pipeline {
     // between a fresh run and a resume
     val chunkCols = candidates.columns.filter(_.matches("chunk_\\d+"))
     Result(
-      mapBack(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
-      mapBack(scored, Seq("doc_a", "doc_b")),
+      ids.mapBack(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
+      ids.mapBack(scored, Seq("doc_a", "doc_b")),
       clusters,
       ccIters
     )
@@ -637,9 +606,7 @@ object Pipeline {
     * weights.
     *
     * `priorDocs0` (the resolved corpus) is read ONLY via pruned
-    * narrow projections/semi-joins; `dictMode = "dense"` is rejected
-    * (dense ids are a per-run dictionary — delta id spaces must be
-    * stable across runs, which "hash" and "off" are). */
+    * narrow projections/semi-joins. */
   def runDelta(
       spark: SparkSession,
       priorDocs0: DataFrame,
@@ -651,33 +618,24 @@ object Pipeline {
     val runId = "delta"
     new java.io.File(runDir).mkdirs()
 
-    val idMode = if (!cfg.dictIds) "off" else cfg.dictMode
-    require(idMode != "dense",
-      "runDelta requires a run-stable id space: dictMode='hash' (or dictIds=false); " +
-        "'dense' ids are a per-run dictionary")
     // the prior run must be delta-capable and share the id space
     locally {
       val marker = java.nio.file.Paths.get(s"$priorRunDir/_dictids")
       require(java.nio.file.Files.exists(marker), s"$priorRunDir has no _dictids marker")
-      val prior = java.nio.file.Files.readString(marker).trim match {
-        case "true" => "hash"
-        case "false" => "off"
-        case m => m
-      }
-      require(prior == idMode,
-        s"prior run dir $priorRunDir uses id mode '$prior' but this delta uses '$idMode'")
+      val prior = java.nio.file.Files.readString(marker).trim
+      require(prior == IdEncoding,
+        s"prior run dir $priorRunDir uses id encoding '$prior' but this delta uses '$IdEncoding'")
     }
     Seq("media_df", "corpus_stats", "cc_assign", "scored_pairs", "clusters").foreach { s =>
       require(done(s"$priorRunDir/$s"),
         s"$priorRunDir/$s missing or incomplete — the prior run must use Cfg.persistForDelta=true")
     }
-    locally {
-      val marker = java.nio.file.Paths.get(s"$runDir/_dictids")
-      if (java.nio.file.Files.exists(marker))
-        require(java.nio.file.Files.readString(marker).trim == idMode,
-          s"delta run dir $runDir was written with a different id mode")
-      else java.nio.file.Files.writeString(marker, idMode)
-    }
+    graft.util.PhaseTracker.set("blocking")
+    // every id the output can carry is a prior doc (all present in the
+    // prior clusters checkpoint — no corpus scan needed) or a new doc;
+    // the guard therefore also catches a new id colliding with a prior one
+    val ids = new IdSpace(runDir,
+      spark.read.parquet(s"$priorRunDir/clusters").select("doc_id").union(newDocs0.select("doc_id")))
     // ancestor chain for attach evidence; this dir extends it by one
     val parents: Seq[String] = {
       val pm = java.nio.file.Paths.get(s"$priorRunDir/_parents")
@@ -687,46 +645,18 @@ object Pipeline {
         else Nil
       above :+ priorRunDir
     }
-    // pin the prior chain exactly like _dictids pins the id mode: a
-    // delta dir resumed against a DIFFERENT prior would silently mix
+    // pin the prior chain like _dictids pins the id encoding: a delta
+    // dir resumed against a DIFFERENT prior would silently mix
     // checkpoints computed against two priors (keys_new/candidates/
     // scored from the first, contraction/media merge from the second)
-    locally {
-      val pm = java.nio.file.Paths.get(s"$runDir/_parents")
-      val chain = parents.mkString("\n")
-      if (java.nio.file.Files.exists(pm))
-        require(java.nio.file.Files.readString(pm).trim == chain.trim,
-          s"delta run dir $runDir was started against a different prior chain " +
-            s"(${java.nio.file.Files.readString(pm).trim.linesIterator.toSeq.lastOption.getOrElse("?")}) — " +
-            s"use a fresh delta dir for prior $priorRunDir")
-      else java.nio.file.Files.writeString(pm, chain)
-    }
+    pin(s"$runDir/_parents", parents.mkString("\n"))(prior =>
+      s"delta run dir $runDir was started against a different prior chain " +
+        s"(${prior.linesIterator.toSeq.lastOption.getOrElse("?")}) — " +
+        s"use a fresh delta dir for prior $priorRunDir")
 
     val ck = new Ckpt(spark, runDir, runId)
+    val docsNew = ids.encode(newDocs0)
 
-    def enc(df: DataFrame): DataFrame =
-      if (idMode == "off") df else df.withColumn("doc_id", xxhash64(col("doc_id")))
-    val docsNew = enc(newDocs0)
-
-    // nid → original-id dictionary for the output boundary: every id
-    // that can appear in the output is either a prior doc (all present
-    // in the prior clusters checkpoint — no corpus scan needed) or a
-    // new doc.
-    val priorClustersOrig = spark.read.parquet(s"$priorRunDir/clusters")
-    lazy val idMap = priorClustersOrig.select(col("doc_id").as("orig_id"))
-      .union(newDocs0.select(col("doc_id").as("orig_id")))
-      .distinct()
-      .select(col("orig_id"), xxhash64(col("orig_id")).as("nid"))
-      .localCheckpoint(true)
-    def mapBack(df: DataFrame, idCols: Seq[String]): DataFrame =
-      if (idMode == "off") df
-      else idCols.foldLeft(df) { (d, c) =>
-        d.join(idMap.select(col("nid").as(c), col("orig_id").as(s"${c}__s")), c)
-          .drop(c)
-          .withColumnRenamed(s"${c}__s", c)
-      }
-
-    graft.util.PhaseTracker.set("blocking")
     // The prior key table is CHAINED, not merged: walking the parent
     // chain backward, each delta dir contributes its delta-sized
     // `keys_new` until the first dir carrying a full `keys` table (a
@@ -748,16 +678,9 @@ object Pipeline {
         .reduce(_.unionByName(_))
     }
     val keysNew = ck.stage("keys_new") {
-      // loud guards, both delta-sized: new ids must not collide with
-      // each other or the prior corpus (hash mode), and must be NEW
-      // (delta adds docs; upsert of an existing doc needs a retract,
-      // which increments cannot express)
-      if (idMode == "hash") {
-        val g = newDocs0.agg(
-          countDistinct(col("doc_id")).as("n"),
-          countDistinct(xxhash64(col("doc_id"))).as("nh")).head()
-        require(g.getLong(0) == g.getLong(1), "xxhash64 doc_id collision among new docs")
-      }
+      // loud guard, delta-sized: new ids must be NEW (delta adds docs;
+      // upsert of an existing doc needs a retract, which increments
+      // cannot express)
       val overlap = docsNew.select("doc_id")
         .join(spark.read.parquet(s"$priorRunDir/cc_assign").select("doc_id"), Seq("doc_id"), "left_semi")
         .count()
@@ -817,7 +740,7 @@ object Pipeline {
       .union(candidates.select(col("doc_b").as("doc_id")))
       .distinct()
     val docsTouched = docsNew.unionByName(
-      enc(priorDocs0).join(touchedIds, Seq("doc_id"), "left_semi"))
+      ids.encode(priorDocs0).join(touchedIds, Seq("doc_id"), "left_semi"))
 
     val scored =
       scoreStage(spark, ck, runDir, runId, cfg, docsTouched, candidates, chunkCol, Some(dfFrac))
@@ -880,7 +803,7 @@ object Pipeline {
             .where(col("score") >= lit(Attach.DefaultAttachFloor))
         }
         .reduce(_.unionByName(_))
-      mapBack(
+      ids.mapBack(
         Attach.attachSingletons(mergedCk, scored.unionByName(ancestorScored)),
         Seq("doc_id", "cluster_id")
       ).repartitionByRange(col("cluster_id"), col("doc_id"))
@@ -890,8 +813,8 @@ object Pipeline {
     ck.await()
     val chunkCols = candidates.columns.filter(_.matches("chunk_\\d+"))
     Result(
-      mapBack(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
-      mapBack(scored, Seq("doc_a", "doc_b")),
+      ids.mapBack(candidates.drop(chunkCols: _*), Seq("doc_a", "doc_b")),
+      ids.mapBack(scored, Seq("doc_a", "doc_b")),
       clusters,
       ccIters
     )

@@ -3,7 +3,7 @@ package graft.util
 /** Shared host-probe primitives and degraded-window thresholds.
   *
   * One home for the instruments that Bench, tools.Weather,
-  * tools.DeltaBench, tools.MemScale and util.LoadProbe previously each
+  * tools.DeltaBench and util.LoadProbe previously each
   * carried a private copy of — the copies had already drifted (guard
   * differences, threshold subsets), and a threshold fix applied to one
   * would silently change what "clean" means for the others. The

@@ -139,10 +139,12 @@ class PipelineDeltaSpec extends AnyFunSuite {
   }
 
   test("guards: dense ids, non-delta prior, and doc upserts are rejected loudly") {
-    // dense ids are a per-run dictionary — no stable cross-run id space
+    // a prior written under dense ids (a per-run dictionary, no stable
+    // cross-run id space) carries no ids this delta can join against
+    val densePrior = dir("gdense")
+    Files.writeString(java.nio.file.Paths.get(s"$densePrior/_dictids"), "dense")
     val e1 = intercept[IllegalArgumentException] {
-      Pipeline.runDelta(spark, docsA, docsB, dirPrior, dir("gdense"),
-        Pipeline.Cfg(dictMode = "dense"))
+      Pipeline.runDelta(spark, docsA, docsB, densePrior, dir("gdensed"))
     }
     assert(e1.getMessage.contains("dense"))
     // a prior run without persistForDelta has no keys/cc_assign tables
@@ -157,6 +159,27 @@ class PipelineDeltaSpec extends AnyFunSuite {
       Pipeline.runDelta(spark, docsA, docsA.limit(3), dirPrior, dir("gup"))
     }
     assert(e3.getMessage.contains("cannot upsert"))
+  }
+
+  test("_dictids pin: run and runDelta refuse a run dir written with string or dense ids") {
+    Seq("off", "dense").foreach { mode =>
+      def pinned(tag: String): String = {
+        val d = dir(s"$tag$mode")
+        Files.writeString(java.nio.file.Paths.get(s"$d/_dictids"), mode)
+        d
+      }
+      val runDir = pinned("pinrun")
+      val e1 = intercept[IllegalArgumentException](Pipeline.run(spark, docsA, runDir))
+      assert(e1.getMessage.contains(s"'$mode'"), e1.getMessage)
+      // refused before any stage directory is written
+      assert(new java.io.File(runDir).list().toSet == Set("_dictids"))
+      prior // a valid prior, so the delta dir's own marker is what fails
+      val deltaDir = pinned("pindelta")
+      val e2 = intercept[IllegalArgumentException](
+        Pipeline.runDelta(spark, docsA, docsB, dirPrior, deltaDir))
+      assert(e2.getMessage.contains(s"'$mode'"), e2.getMessage)
+      assert(new java.io.File(deltaDir).list().toSet == Set("_dictids"))
+    }
   }
 
   test("_parents pin: resuming a delta dir against a different prior fails loudly") {

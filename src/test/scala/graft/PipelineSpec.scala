@@ -4,6 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import graft.schema.Fixture
 import graft.pipeline.Pipeline
+import graft.blocking.Blocking
+import graft.scoring.Scoring
+import graft.cluster.{Attach, ConnectedComponents}
 import graft.tools.Calibrate
 import java.nio.file.Files
 
@@ -29,42 +32,49 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("cluster ids are members of their own cluster (canonical-id stability)") {
-    // canonical id = the doc_id of the min-nid member (dictIds path):
-    // must BE a member, and must be the same member on every rerun
-    // (determinism is covered by the resume byte-identity test below)
+    // canonical id = the doc_id of the min-nid member: must BE a member,
+    // and must be the same member on every rerun (determinism is
+    // covered by the resume byte-identity test below)
     val members = result.clusters.select(col("doc_id").as("m"))
     val bad = result.clusters.select(col("cluster_id").as("m")).distinct()
       .join(members, Seq("m"), "left_anti")
       .count()
     assert(bad == 0, s"$bad cluster ids are not member doc ids")
-    // and with dictIds off, the canonical id is the lexicographic min
-    val dirS = Files.createTempDirectory("graft_pipe_strid").toString
-    val strRun = Pipeline.run(spark, docs, dirS, Pipeline.Cfg(dictIds = false))
-    val badS = strRun.clusters
+    // the same layers composed over the ORIGINAL string ids: the
+    // canonical id is then the lexicographic min member
+    val cand = Blocking.candidates(docs, Blocking.Cfg()).localCheckpoint(true)
+    val scored = Scoring.score(cand, docs).localCheckpoint(true)
+    val edges = scored.where(col("is_match")).select(col("doc_a").as("src"), col("doc_b").as("dst"))
+    val cc = ConnectedComponents.run(edges, docs.select("doc_id"))
+    val strClusters = Attach.attachSingletons(cc.assignments.localCheckpoint(true), scored)
+      .select("doc_id", "cluster_id").localCheckpoint(true)
+    val badS = strClusters
       .groupBy("cluster_id").agg(min("doc_id").as("mn"))
       .where(col("cluster_id") =!= col("mn"))
       .count()
     assert(badS == 0)
     // same PARTITION either way: canonical labels differ but the
     // grouping must be identical (hash ids are order-scrambled, so this
-    // is the real cross-path equivalence check)
+    // is the real cross-encoding equivalence check)
     val a = result.clusters.groupBy("cluster_id")
       .agg(sort_array(collect_list("doc_id")).as("ms"))
       .select("ms")
-    val b = strRun.clusters.groupBy("cluster_id")
+    val b = strClusters.groupBy("cluster_id")
       .agg(sort_array(collect_list("doc_id")).as("ms"))
       .select("ms")
     assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0,
-      "dictIds=true and dictIds=false must produce identical partitions")
-    // dense-dictionary mode (the 10¹²-doc encoding): same partition AND
-    // — because dense ids are assigned in doc_id sort order — the exact
-    // same canonical labels as the string path
-    val dirD = Files.createTempDirectory("graft_pipe_dense").toString
-    val denseRun = Pipeline.run(spark, docs, dirD, Pipeline.Cfg(dictMode = "dense"))
-    val d = denseRun.clusters.select("cluster_id", "doc_id")
-    val s = strRun.clusters.select("cluster_id", "doc_id")
-    assert(d.exceptAll(s).count() == 0 && s.exceptAll(d).count() == 0,
-      "dense mode must reproduce the string path's exact cluster labels")
+      "hash-id pipeline and string-id composition must produce identical partitions")
+  }
+
+  test("collision guard: two ids sharing one nid throw, naming both ids") {
+    val s = spark
+    import s.implicits._
+    val ok = Seq(("a", 1L), ("b", 2L)).toDF("orig_id", "nid")
+    Pipeline.requireUniqueNids(ok)
+    val clash = Seq(("doc-x", 7L), ("doc-y", 7L), ("doc-z", 8L)).toDF("orig_id", "nid")
+    val e = intercept[IllegalArgumentException](Pipeline.requireUniqueNids(clash))
+    assert(e.getMessage.contains("doc-x") && e.getMessage.contains("doc-y"), e.getMessage)
+    assert(!e.getMessage.contains("doc-z"), e.getMessage)
   }
 
   test("pairwise F1 >= 0.99 on labeled same-block pairs") {
